@@ -1,4 +1,4 @@
-.PHONY: test test-full test-norename bench smoke lint
+.PHONY: test test-full test-norename bench perfbench smoke lint
 
 # the object-store semantics gate (r15): the full index / docstore /
 # IVF-PQ / compaction suites against the rename-less backend
@@ -9,7 +9,8 @@ test-norename:
 	  tests/test_metastore_contract.py tests/test_metastore_norename.py \
 	  tests/test_index_commits.py tests/test_index_v2.py \
 	  tests/test_docstore.py tests/test_ivfpq_store.py tests/test_pq.py \
-	  tests/test_icontains_index.py tests/test_search_index.py -q
+	  tests/test_icontains_index.py tests/test_search_index.py \
+	  tests/test_index_reader.py -q
 
 # fast suite: oracle parity at sf0.001 + unit/property/plan/streaming
 # tests, MINUS the `full`-marked slow long-tail (pytest.ini deselects
@@ -25,6 +26,17 @@ test-full:
 # one JSON line of per-query wall times at $(or $(SPARK_GRAFT_SF_DIR),/root/testdata/sf0.1)
 bench:
 	python bench.py
+
+# the movies-catalog benchmark: its own tests, then one seeded run of
+# each BENCHMARK.json workload for run_seconds (each run prints its
+# report and, last, its JSON line of end-to-end metrics)
+perfbench:
+	python -m pytest perfbench/test_perfbench.py -q
+	for w in $$(python3 -c "import json; print(*(w['name'] for w in json.load(open('BENCHMARK.json'))['workloads']))"); do \
+	  python3 perfbench/run.py --workload $$w --seed 1 \
+	    --seconds $$(python3 -c "import json; print(json.load(open('BENCHMARK.json'))['run_seconds'])") \
+	    || exit 1; \
+	done
 
 # driver-contract smoke: entry() rows + queries()/oracle_sql() key invariant
 smoke:

@@ -85,12 +85,22 @@ def film_listing(
 
 
 def paginate(listing: DataFrame, page: int = 1, page_size: int = 50) -> dict:
-    """Pagination envelope (reference views.py:66-83): one count() pass +
-    one page slice. Returns {count, total_pages, prev, next, results}."""
-    count = listing.count()
+    """Pagination envelope (reference views.py:66-83). Returns {count,
+    total_pages, prev, next, results}. The count and the requested page
+    come back from one Spark action (plans.tuning.collect_with_count);
+    only a page past the last one costs a second action, which serves
+    the last page instead."""
+    from ..plans.tuning import collect_with_count
+
+    def page_of(n: int) -> DataFrame:
+        return listing.offset((n - 1) * page_size).limit(page_size)
+
+    page = max(1, page)
+    rows, count = collect_with_count(page_of(page), listing)
     total_pages = max(1, math.ceil(count / page_size))
-    page = max(1, min(page, total_pages))
-    rows = listing.offset((page - 1) * page_size).limit(page_size).collect()
+    if page > total_pages:
+        page = total_pages
+        rows = page_of(page).collect()
     return {
         "count": count,
         "total_pages": total_pages,

@@ -10,6 +10,9 @@ have thousands of row groups and the spread becomes a no-op cost-wise
 behavior mirrors the common production case of a few huge gzip/parquet
 blobs feeding a CPU-bound stage.
 
+``collect_with_count``: a response page and the count of the rows it
+was cut from, in ONE Spark action.
+
 ``plan_string`` / ``assert_broadcast_join``: introspection for tests
 that pin the physical strategy (broadcasts stay broadcasts, pushed
 filters reach the scan).
@@ -111,6 +114,28 @@ def salted_join(
     )
     out = salted_left.join(salted_right, [key, "_salt"], how)
     return out.drop("_salt")
+
+
+def collect_with_count(page: DataFrame, counted: DataFrame) -> tuple[list, int]:
+    """``(page.collect(), counted.count())`` from one Spark action: the
+    page rows (each wrapped in one struct column) are unioned with a
+    one-row count of ``counted`` and collected together. The count is
+    a real aggregate over every row of ``counted`` — unlike an observed
+    metric, it cannot be cut short by a limit above it that stops
+    reading early. When ``page`` is cut from ``counted`` the two
+    branches share the plan's exchanges (Spark reuses an identical
+    exchange within one query), so the shared input is resolved once.
+    The union concatenates its inputs' partitions in order, and a
+    sorted top-k page is one sorted partition, so page order holds."""
+    rows = (
+        page.selectExpr("struct(*) AS __row")
+        .unionByName(
+            counted.selectExpr("count(1) AS __count"), allowMissingColumns=True
+        )
+        .collect()
+    )
+    count = next(r["__count"] for r in rows if r["__count"] is not None)
+    return [r["__row"] for r in rows if r["__row"] is not None], count
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:

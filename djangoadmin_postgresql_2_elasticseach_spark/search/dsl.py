@@ -387,12 +387,18 @@ def search(docs: DataFrame, body: dict, id_col: str = "id") -> dict:
 def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
     """The response-building tail shared by the corpus-scan `search`
     and the index-served `search_indexed`: total count, collapse,
-    search_after keyset, sort/from/size page, aggregations."""
+    search_after keyset, sort/from/size page, aggregations.
+
+    ``hits.total`` counts every row of ``frame`` (before collapse,
+    search_after and from/size, like ES) and comes back from the same
+    Spark action as the page (plans.tuning.collect_with_count): the
+    candidate set is resolved once, not once for a ``count()`` and
+    again for the page."""
     from pyspark.sql import Window
 
-    total = frame.count()
-    size = body.get("size", DEFAULT_SIZE)
+    from ..plans.tuning import collect_with_count
 
+    size = body.get("size", DEFAULT_SIZE)
     offset = body.get("from", 0)
 
     hits = []
@@ -415,7 +421,8 @@ def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
         page = page.orderBy(*exprs)
         if offset:
             page = page.offset(offset)
-        for r in page.limit(size).collect():
+        rows, total = collect_with_count(page.limit(size), frame)
+        for r in rows:
             d = r.asDict(recursive=True)
             sort_vals = [d[f] for f, _ in keys]
             score = d.pop("score", None)
@@ -423,6 +430,8 @@ def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
             if score is not None:
                 hit["_score"] = score
             hits.append(hit)
+    else:
+        total = frame.count()
 
     resp: dict[str, Any] = {"hits": {"total": {"value": total}, "hits": hits}}
     if body.get("aggs") or body.get("aggregations"):
@@ -448,24 +457,27 @@ def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
 def _token_candidates(spark, path: str, meta: dict, fields, tokens):
     """doc_ids holding ANY of ``tokens`` in ANY of ``fields`` — one
     bucket-pruned postings probe (partition filter from the index's
-    persisted n_buckets + pushed `token IN`), distinct'd. Empty token
-    set → typed-empty frame (an all-stopword match clause matches
-    nothing, exactly like the scan path's `lit(False)`)."""
+    persisted n_buckets + pushed `token IN`). Not distinct'd: a doc
+    holding several of the tokens repeats, and every consumer of a
+    candidate frame is a semi- or anti-join, which a repeated key does
+    not change — a distinct would only add a shuffle stage (one more
+    Spark job per clause). Empty token set → typed-empty frame (an
+    all-stopword match clause matches nothing, exactly like the scan
+    path's `lit(False)`)."""
+    from ..functions.snowball import _spark_str
     from .index import read_postings, term_buckets
 
     posts = read_postings(spark, path)
     if not tokens:
-        return posts.filter(F.lit(False)).select("doc_id")
+        return posts.filter("false").select("doc_id")
     buckets = term_buckets(tokens, meta["n_buckets"])
-    return (
-        posts.filter(
-            F.col("field").isin(list(fields))
-            & F.col("tkb").isin(buckets)
-            & F.col("token").isin(sorted(tokens))
-        )
-        .select("doc_id")
-        .distinct()
-    )
+    # one SQL predicate: parsed in a single driver round trip, where the
+    # Column form costs several per literal
+    return posts.filter(
+        f"field IN ({', '.join(_spark_str(f) for f in fields)})"
+        f" AND tkb IN ({', '.join(str(b) for b in buckets)})"
+        f" AND token IN ({', '.join(_spark_str(t) for t in sorted(tokens))})"
+    ).select("doc_id")
 
 
 def _stemmed_field(meta: dict, field: str) -> bool:
@@ -670,8 +682,11 @@ def _index_candidates(
                 if cc is None or rr is not None:
                     return None, q
                 union = cc if union is None else union.unionByName(cc)
-            u = union.distinct()
-            cands = u if cands is None else cands.join(u, "doc_id", "left_semi")
+            cands = (
+                union
+                if cands is None
+                else cands.join(union, "doc_id", "left_semi")
+            )
         # should WITH a positive context is score-boost-only (the scan
         # path ignores it too) — dropped from the residual deliberately
         for c in as_list(b.get("must_not")):
@@ -709,7 +724,7 @@ def search_frame_indexed(
     if cands is None:
         return _apply_query(docs, q, id_col)
     pruned = docs.join(
-        cands.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
+        cands.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
     )
     if residual is None:
         return pruned, False

@@ -31,6 +31,9 @@ import json
 import os
 import shutil
 import tempfile
+import threading
+import uuid
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -355,8 +358,27 @@ def _load_meta(meta_path: str) -> dict | None:
 def _write_meta(meta_path: str, meta: dict) -> None:
     """Atomic sidecar publish — the ONE metastore operation that
     commits a tick (all-or-nothing per the IndexMetastore contract;
-    POSIX backend: temp + os.replace)."""
+    POSIX backend: temp + os.replace). A sidecar written without an
+    ``index_uuid`` (a fresh build, or an index removed and rebuilt at
+    the same path) gets a new one: it names the index incarnation in
+    the reader-snapshot key, so a rebuilt index never matches a
+    snapshot of its predecessor."""
+    if not meta.get("index_uuid"):
+        meta = {**meta, "index_uuid": uuid.uuid4().hex}
     get_metastore().publish_meta(meta_path, meta)
+
+
+def _bump_maint_epoch(path: str) -> None:
+    """Publish ``maint_epoch + 1`` in the index's sidecar. Every
+    in-place rewrite of committed files (a tiered leaf swap, a leaf
+    restored by fold recovery) calls this under the lease it holds, so
+    a reader snapshot listing the replaced files is retired on the
+    next request — the visibility watermarks alone do not move there."""
+    mpath = _posting_meta_path(path)
+    meta = _load_meta(mpath)
+    if meta is not None:
+        meta["maint_epoch"] = int(meta.get("maint_epoch") or 0) + 1
+        _write_meta(mpath, meta)
 
 
 def _merge_range(ranges: list, lo: int, hi: int) -> list:
@@ -1105,10 +1127,11 @@ def read_docstore(
     one field reads one field). This is the `docs` frame for fully
     index-resident serving: `search_indexed(spark, read_docstore(...),
     body, path)` answers a DSL body with NO source-corpus read."""
-    meta = read_posting_meta(path)
-    df = spark.read.parquet(_art(path, "docstore", meta))
+    reader = index_reader(spark, path)
     if live_only:
-        df = _apply_tombstones(spark, path, df, meta=meta)
+        df = reader.live_relation("docstore")
+    else:
+        df = reader.relation("docstore")
     if columns is not None:
         df = df.select("doc_id", *columns)
     else:
@@ -1131,8 +1154,9 @@ def fetch_docs(
     buckets anyway, so large sequences and DataFrames take a semi-join
     instead (the bulk path: one shuffle-free broadcast join when the
     key side is small, AQE otherwise)."""
-    meta = read_posting_meta(path)
-    store = spark.read.parquet(_art(path, "docstore", meta))
+    reader = index_reader(spark, path)
+    meta = reader.meta
+    store = reader.relation("docstore")
     if isinstance(ids, DataFrame):
         key = ids.columns[0]
         df = store.join(
@@ -1152,8 +1176,7 @@ def fetch_docs(
                 F.col("dsb").isin(store_buckets(ids, meta["n_store_buckets"]))
                 & F.col("doc_id").isin(ids)
             )
-    df = _apply_tombstones(spark, path, df, meta=meta)
-    return df.drop("seq", "dsb")
+    return reader.live(df).drop("seq", "dsb")
 
 
 def _chardict_candidates(
@@ -1167,11 +1190,9 @@ def _chardict_candidates(
     pinned in tests/test_icontains_index.py (PartitionFilters on
     gkb)."""
     grams = fragment_grams(frag)
+    reader = index_reader(spark, path)
     cd = _visible(
-        _read_or_empty(
-            spark, _art(path, "chardict", meta), CHARDICT_SCHEMA
-        ),
-        meta,
+        reader.relation("chardict", CHARDICT_SCHEMA), reader.meta
     ).filter(
         (F.col("field") == field)
         & F.col("gkb").isin(term_buckets(grams, int(meta["char_ngrams"])))
@@ -1665,45 +1686,54 @@ def append_posting_index(
     invalidate_spread_cache(new_docs.sparkSession)
 
 
-def _apply_tombstones(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    key: str = "doc_id",
-    meta: dict | None = None,
-) -> DataFrame:
-    """Exclude dead rows: a row is live iff no tombstone exists for its
-    key, or it was written AFTER the key's latest tombstone (seq
-    comparison — an upsert's re-added rows carry a newer seq than the
-    delete that retired the old version). The tombstone set is bounded
-    by churn between compactions (compaction applies it physically;
-    the tiered pass folds it to one row per key), so the max-per-key
-    frame normally broadcasts — but the hint is THRESHOLD-GATED on the
-    tombstone files' on-disk size (TOMBSTONE_BROADCAST_MAX_BYTES): a
-    bulk re-index between compactions makes the set O(re-indexed
-    docs), and an unconditional broadcast there is an OOM, not a
-    slowdown; past the gate the liveness filter becomes a plain join
-    (AQE picks the strategy). ``meta`` applies the commit-watermark
-    visibility to BOTH sides (None = legacy full visibility). Shared
-    by the posting index (key=doc_id) and the IVF-PQ vector index
-    (key=vec_id, operators/similarity.py)."""
-    tpath = _art(path, "_tombstones", meta)
-    df = _visible(df, meta)
-    if not os.path.exists(tpath):
-        return df
+def _data_files(root: str) -> list[str]:
+    """The committed parquet data files under ``root`` — what a Spark
+    scan of it lists: hidden (``_``/``.``-prefixed) directories, such as
+    an in-flight write's ``_temporary/``, are skipped."""
+    out = []
+    for dp, dns, fns in os.walk(root):
+        dns[:] = [d for d in dns if not d.startswith(("_", "."))]
+        out.extend(
+            os.path.join(dp, f)
+            for f in fns
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    return out
+
+
+def _tombstone_max(
+    spark: SparkSession, tpath: str, meta: dict | None, key: str
+) -> DataFrame | None:
+    """The visible tombstone set at ``tpath`` folded to (key, max seq),
+    or None when it holds no committed data file — absent, or created
+    by the first tombstone write of a tick that has only its
+    ``_temporary/`` staging so far (nothing there is visible yet, and a
+    Spark read of it would fail schema inference). The frame normally
+    broadcasts, but the hint is THRESHOLD-GATED on the files' on-disk
+    size (TOMBSTONE_BROADCAST_MAX_BYTES): a bulk re-index between
+    compactions makes the set O(re-indexed docs), and an unconditional
+    broadcast there is an OOM, not a slowdown; past the gate the
+    liveness filter becomes a plain join (AQE picks the strategy)."""
+    files = _data_files(tpath)
+    if not files:
+        return None
     tomb = (
         _visible(spark.read.parquet(tpath), meta)
         .groupBy(key)
         .agg(F.max("seq").alias("_tomb_seq"))
     )
-    tomb_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _dns, fns in os.walk(tpath)
-        for f in fns
-        if f.endswith(".parquet")
-    )
-    if tomb_bytes <= TOMBSTONE_BROADCAST_MAX_BYTES:
+    if sum(os.path.getsize(f) for f in files) <= TOMBSTONE_BROADCAST_MAX_BYTES:
         tomb = F.broadcast(tomb)
+    return tomb
+
+
+def _drop_dead(df: DataFrame, tomb: DataFrame | None, key: str) -> DataFrame:
+    """A row is live iff no tombstone exists for its key, or it was
+    written AFTER the key's latest tombstone (seq comparison — an
+    upsert's re-added rows carry a newer seq than the delete that
+    retired the old version)."""
+    if tomb is None:
+        return df
     return (
         df.join(tomb, key, "left")
         .filter(
@@ -1711,6 +1741,27 @@ def _apply_tombstones(
         )
         .drop("_tomb_seq")
     )
+
+
+def _apply_tombstones(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    key: str = "doc_id",
+    meta: dict | None = None,
+) -> DataFrame:
+    """Exclude dead rows (_drop_dead) after the commit-watermark
+    visibility filter on BOTH sides (``meta`` None = legacy full
+    visibility), reading the tombstone set now. The tombstone set is
+    bounded by churn between compactions (compaction applies it
+    physically; the tiered pass folds it to one row per key). Used by
+    the compaction passes and the IVF-PQ vector index (key=vec_id,
+    operators/similarity.py); serving reads go through
+    IndexReader.live, which builds the tombstone frame once per
+    visible state."""
+    df = _visible(df, meta)
+    tomb = _tombstone_max(spark, _art(path, "_tombstones", meta), meta, key)
+    return _drop_dead(df, tomb, key)
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -1726,24 +1777,157 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
         return spark.createDataFrame([], schema)
 
 
+# ---------------------------------------------------------------------------
+# Reader snapshots: the Elasticsearch searcher-per-refresh posture. A
+# serve path that re-opened the index per request paid, on every
+# request, a parquet schema-inference job and a file listing for each
+# artifact it touched (postings, docstore, _tombstones). An
+# IndexReader instead holds one VISIBLE STATE of an index: its parquet
+# relations are opened once — schema resolved, files listed — and the
+# tombstone frame is built once; every read of that state reuses them.
+#
+# The snapshot key is what the meta sidecar says is visible:
+# (index_uuid, committed_seq, dead_ranges, generation, maint_epoch).
+# A commit moves committed_seq, a crashed writer's fence moves
+# dead_ranges, a norename swap moves generation, and every in-place
+# rewrite of committed files bumps maint_epoch under the writer lease
+# (tiered leaf swaps, fold recovery, the full compaction); index_uuid
+# changes when an index is rebuilt from scratch at the same path. So a
+# reader sees a commit on its first request after the sidecar publish,
+# and never lists files a rewrite has since replaced. Only the latest
+# snapshot per index path is kept (at most MAX_READERS paths, least
+# recently used evicted); a snapshot holds plans and file listings,
+# never data.
+# ---------------------------------------------------------------------------
+
+MAX_READERS = 64
+
+_READERS: OrderedDict = OrderedDict()
+_READERS_LOCK = threading.Lock()
+
+
+def _reader_key(meta: dict | None) -> tuple | None:
+    """The visible-state key of ``meta``, or None when the index cannot
+    be snapshotted (no sidecar, or a legacy index without a counter:
+    nothing there says when its files change)."""
+    if not meta or meta.get("committed_seq") is None:
+        return None
+    return (
+        meta.get("index_uuid"),
+        int(meta["committed_seq"]),
+        tuple(tuple(r) for r in meta.get("dead_ranges") or ()),
+        int(meta.get("generation") or 0),
+        int(meta.get("maint_epoch") or 0),
+    )
+
+
+class IndexReader:
+    """One visible state of a posting index (see the section comment).
+    Safe to share across threads: relations open lazily under a lock,
+    and a DataFrame is an immutable plan."""
+
+    def __init__(self, spark: SparkSession, path: str, meta: dict, key):
+        self.spark = spark
+        self.path = path
+        self.meta = meta
+        self.key = key
+        self._lock = threading.RLock()
+        self._memo: dict = {}
+
+    def serves(self, key, spark: SparkSession) -> bool:
+        """Whether this snapshot is the state ``key`` for ``spark``'s
+        session (its frames cannot join another session's)."""
+        return self.key == key and (
+            self.spark is spark
+            or self.spark._jsparkSession.equals(spark._jsparkSession)
+        )
+
+    def _once(self, name, build):
+        with self._lock:
+            if name not in self._memo:
+                self._memo[name] = build()
+            return self._memo[name]
+
+    def has(self, name: str) -> bool:
+        """Whether artifact ``name`` exists in this state."""
+        return self._once(
+            ("has", name),
+            lambda: os.path.isdir(_art(self.path, name, self.meta)),
+        )
+
+    def relation(self, name: str, schema: str | None = None) -> DataFrame:
+        """Artifact ``name`` as a raw parquet relation (every row on
+        disk, no visibility filter). With ``schema``, a directory with
+        no data file reads as a typed empty frame (_read_or_empty);
+        without, it raises like ``spark.read.parquet``."""
+        p = _art(self.path, name, self.meta)
+
+        def build():
+            if schema is None:
+                return self.spark.read.parquet(p)
+            return _read_or_empty(self.spark, p, schema)
+
+        return self._once(("rel", name), build)
+
+    def tombstones(self, key: str = "doc_id") -> DataFrame | None:
+        """The visible (key, max seq) tombstone frame, None if none."""
+        return self._once(
+            ("tomb", key),
+            lambda: _tombstone_max(
+                self.spark,
+                _art(self.path, "_tombstones", self.meta),
+                self.meta,
+                key,
+            ),
+        )
+
+    def live(self, df: DataFrame, key: str = "doc_id") -> DataFrame:
+        """``df`` (rows of this index) restricted to committed, live
+        rows."""
+        return _drop_dead(_visible(df, self.meta), self.tombstones(key), key)
+
+    def live_relation(self, name: str, schema: str | None = None) -> DataFrame:
+        return self._once(
+            ("live", name), lambda: self.live(self.relation(name, schema))
+        )
+
+
+def index_reader(spark: SparkSession, path: str) -> IndexReader:
+    """The reader snapshot of the index at ``path`` as it is visible
+    now: the cached one while the sidecar's key is unchanged, else a
+    fresh one that replaces it."""
+    meta = read_posting_meta(path)
+    key = _reader_key(meta)
+    if key is None:
+        return IndexReader(spark, path, meta, None)
+    ap = os.path.abspath(path)
+    with _READERS_LOCK:
+        reader = _READERS.get(ap)
+        if reader is None or not reader.serves(key, spark):
+            reader = IndexReader(spark, path, meta, key)
+            _READERS[ap] = reader
+        _READERS.move_to_end(ap)
+        while len(_READERS) > MAX_READERS:
+            _READERS.popitem(last=False)
+    return reader
+
+
 def read_postings(
     spark: SparkSession, path: str, live_only: bool = True
 ) -> DataFrame:
-    meta = read_posting_meta(path)
-    df = _read_or_empty(spark, _art(path, "postings", meta), POSTINGS_SCHEMA)
+    reader = index_reader(spark, path)
     if not live_only:
-        return df
-    return _apply_tombstones(spark, path, df, meta=meta)
+        return reader.relation("postings", POSTINGS_SCHEMA)
+    return reader.live_relation("postings", POSTINGS_SCHEMA)
 
 
 def read_doclens(
     spark: SparkSession, path: str, live_only: bool = True
 ) -> DataFrame:
-    meta = read_posting_meta(path)
-    df = _read_or_empty(spark, _art(path, "doclens", meta), DOCLENS_SCHEMA)
+    reader = index_reader(spark, path)
     if not live_only:
-        return df
-    return _apply_tombstones(spark, path, df, meta=meta)
+        return reader.relation("doclens", DOCLENS_SCHEMA)
+    return reader.live_relation("doclens", DOCLENS_SCHEMA)
 
 
 def read_termdict(
@@ -1768,12 +1952,14 @@ def read_termdict(
     verdict's last unpruned serve read); v1/v2 termdicts fall back to
     the post-read length filter, which still cuts the distinct shuffle
     from vocabulary-sized to band-sized."""
-    meta = read_posting_meta(path)
-    tdir = _art(path, "termdict", meta)
-    if not os.path.isdir(tdir):
-        td = read_postings(spark, path).select("field", "token")
+    reader = index_reader(spark, path)
+    meta = reader.meta
+    if not reader.has("termdict"):
+        td = reader.live_relation("postings", POSTINGS_SCHEMA).select(
+            "field", "token"
+        )
     else:
-        td = _visible(_read_or_empty(spark, tdir, TERMDICT_SCHEMA), meta)
+        td = _visible(reader.relation("termdict", TERMDICT_SCHEMA), meta)
     if fields is not None:
         td = td.filter(F.col("field").isin(list(fields)))
     if length_between is not None:
@@ -1809,8 +1995,8 @@ def index_stats(spark: SparkSession, path: str) -> DataFrame:
     add both together under one commit; the tiered pass folds doclens
     FILES without dropping dead rows; the full compaction drops dead
     rows and recomputes stats/ inside one atomic swap."""
-    meta = read_posting_meta(path)
-    sdir = _art(path, "stats", meta)
+    reader = index_reader(spark, path)
+    meta = reader.meta
     if meta.get("field_stats") is not None:
         # layout v2: the per-field sums live in the meta sidecar,
         # folded in atomically at each commit — the base is a pure
@@ -1819,35 +2005,27 @@ def index_stats(spark: SparkSession, path: str) -> DataFrame:
             [(f, int(n), int(s)) for f, (n, s) in meta["field_stats"].items()],
             "field string, n_docs long, sum_dl long",
         )
-    elif not os.path.isdir(sdir):
+    elif not reader.has("stats"):
         # legacy index (pre-stats artifact): the historical full-doclens
         # aggregate, kept only for indexes built before r12
-        return read_doclens(spark, path).groupBy("field").agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-        )
+        return reader.live_relation("doclens", DOCLENS_SCHEMA).groupBy(
+            "field"
+        ).agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
     else:
         base = (
-            _visible(_read_or_empty(spark, sdir, STATS_SCHEMA), meta)
+            _visible(reader.relation("stats", STATS_SCHEMA), meta)
             .groupBy("field")
             .agg(
                 F.sum("n_docs").alias("n_docs"),
                 F.sum("sum_dl").alias("sum_dl"),
             )
         )
-    tpath = _art(path, "_tombstones", meta)
-    if not os.path.exists(tpath):
+    tomb = reader.tombstones()
+    if tomb is None:
         return base
-    tomb = (
-        _visible(spark.read.parquet(tpath), meta)
-        .groupBy("doc_id")
-        .agg(F.max("seq").alias("_tomb_seq"))
-    )
-    lens = _visible(
-        _read_or_empty(spark, _art(path, "doclens", meta), DOCLENS_SCHEMA),
-        meta,
-    )
+    lens = _visible(reader.relation("doclens", DOCLENS_SCHEMA), meta)
     dead = (
-        lens.join(F.broadcast(tomb), "doc_id")
+        lens.join(tomb, "doc_id")
         .filter(F.col("seq") <= F.col("_tomb_seq"))
         .groupBy("field")
         .agg(F.count(F.lit(1)).alias("_dn"), F.sum("dl").alias("_dsum"))
@@ -2035,9 +2213,7 @@ def match_phrase_from_index(
     the index stays slim). Same stopword-gap divergence as the
     scan-based match_phrase (positions are post-stopword indexes);
     equal output to it over the same docs, pinned in tests."""
-    import functools
-    import operator
-
+    from ..functions.snowball import _spark_str
     from .query import analyze_query
 
     meta = read_posting_meta(path)
@@ -2056,51 +2232,45 @@ def match_phrase_from_index(
     if not qterms:
         raise ValueError("empty phrase after analysis")
     buckets = term_buckets(qterms, meta["n_buckets"])
+    # the probe, pivot and alignment are SQL text: each parses in one
+    # driver round trip, where the Column form costs several per term
     posts = read_postings(spark, path).filter(
-        (F.col("field") == field)
-        & F.col("tkb").isin(buckets)
-        & F.col("token").isin(list(set(qterms)))
+        f"field = {_spark_str(field)}"
+        f" AND tkb IN ({', '.join(str(b) for b in buckets)})"
+        f" AND token IN ({', '.join(_spark_str(t) for t in sorted(set(qterms)))})"
     )
     # one row per (doc, token) across disjoint batches, so first() picks
     # the unique positions array per term
     pivot = posts.groupBy("doc_id").agg(
         *[
-            F.first(
-                F.when(F.col("token") == F.lit(t), F.col("positions")),
-                ignorenulls=True,
-            ).alias(f"pos{i}")
+            F.expr(
+                f"first(CASE WHEN token = {_spark_str(t)} THEN positions END,"
+                f" true) AS pos{i}"
+            )
             for i, t in enumerate(qterms)
         ]
     )
-    all_present = functools.reduce(
-        operator.and_,
-        [F.col(f"pos{i}").isNotNull() for i in range(len(qterms))],
-    )
+    present = " AND ".join(f"pos{i} IS NOT NULL" for i in range(len(qterms)))
     if len(qterms) == 1:
-        aligned = F.lit(True)
-    elif slop <= 0:
-        aligned = F.exists(
-            F.col("pos0"),
-            lambda p: functools.reduce(
-                operator.and_,
-                [
-                    F.array_contains(F.col(f"pos{j}"), p + F.lit(j))
-                    for j in range(1, len(qterms))
-                ],
-            ),
+        return pivot.filter(present).select("doc_id")
+    if slop <= 0:
+        follows = " AND ".join(
+            f"array_contains(pos{j}, p + {j})" for j in range(1, len(qterms))
         )
-    else:
-        # ordered sloppy match over the stored position lists — the
-        # same greedy chain the scan-side phrase_condition builds
-        # (search/query._sloppy_chain), fed by postings positions
-        from .query import _sloppy_chain
+        return pivot.filter(
+            f"{present} AND exists(pos0, p -> {follows})"
+        ).select("doc_id")
+    # ordered sloppy match over the stored position lists — the same
+    # greedy chain the scan-side phrase_condition builds
+    # (search/query._sloppy_chain), fed by postings positions
+    from .query import _sloppy_chain
 
-        aligned = _sloppy_chain(
-            [F.col(f"pos{i}") for i in range(len(qterms))],
-            len(qterms),
-            slop,
-        )
-    return pivot.filter(all_present).filter(aligned).select("doc_id")
+    aligned = _sloppy_chain(
+        [F.col(f"pos{i}") for i in range(len(qterms))],
+        len(qterms),
+        slop,
+    )
+    return pivot.filter(present).filter(aligned).select("doc_id")
 
 
 def compact_posting_index(spark: SparkSession, path: str) -> None:
@@ -2246,6 +2416,7 @@ def _compact_posting_locked(spark: SparkSession, path: str) -> None:
         "dead_ranges": [],
         "layout_v": LAYOUT_V,
         "field_stats": field_stats,
+        "maint_epoch": int(meta.get("maint_epoch") or 0) + 1,
     }
     if not store.supports_rename:
         # the SWAP is one CAS of the generation pointer: readers
@@ -2334,6 +2505,9 @@ def _swap_leaf(
     store.rename(leaf, old)
     store.rename(tmp, leaf)
     store.remove_tree(old)
+    # the leaf's files were replaced in place: retire reader snapshots
+    # that listed the old ones
+    _bump_maint_epoch(path)
 
 
 def _recover_folds(path: str) -> None:
@@ -2351,6 +2525,7 @@ def _recover_folds(path: str) -> None:
 
     store = get_metastore()
     entries = [d for d in store.listdir(path) if d.startswith("_fold-")]
+    restored = False
     for d in entries:
         if not d.startswith("_fold-old-"):
             continue
@@ -2358,10 +2533,13 @@ def _recover_folds(path: str) -> None:
         if not store.exists(leaf):
             try:
                 store.rename(os.path.join(path, d), leaf)
+                restored = True
             except OSError:
                 pass  # a concurrent recoverer won the rename — fine
     for d in entries:
         store.remove_tree(os.path.join(path, d))
+    if restored:
+        _bump_maint_epoch(path)
 
 
 def _maybe_recover_folds(path: str) -> None:

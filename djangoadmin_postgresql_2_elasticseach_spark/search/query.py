@@ -30,7 +30,7 @@ the persisted artifact instead of re-analyzing in-query.
 
 from __future__ import annotations
 
-import re
+import unicodedata
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,14 +39,22 @@ from ..functions.text import ALL_STOPWORDS, analyze
 
 # Python twin of functions.text.tokenize for the query string itself —
 # the same analyzer must hit both sides of the match (ES analyzes the
-# query with the field's analyzer too).
-_QUERY_SPLIT = re.compile(r"[^0-9a-zA-ZЀ-ӿ]+")
+# query with the field's analyzer too). The index side splits on
+# TOKEN_SPLIT_RE = [^\p{L}\p{Nd}]+ (Java regex); Python's `re` has no
+# \p{..} classes, so a character is a token character here iff its
+# Unicode general category is a letter (L*) or a decimal digit (Nd).
+_TOKEN_CATEGORIES = frozenset(("Lu", "Ll", "Lt", "Lm", "Lo", "Nd"))
 _STOPSET = frozenset(ALL_STOPWORDS)
 
 
 def query_tokens(query: str) -> list[str]:
-    """Tokenizer-only query split (lowercase, non-alphanumeric breaks)."""
-    return [t for t in _QUERY_SPLIT.split(query.lower()) if t]
+    """Tokenizer-only query split: lowercase, then break on every
+    character that is neither a letter nor a decimal digit — exactly
+    the index-side ``split(lower(text), TOKEN_SPLIT_RE)``."""
+    return "".join(
+        ch if unicodedata.category(ch) in _TOKEN_CATEGORIES else " "
+        for ch in query.lower()
+    ).split()
 
 
 def analyze_query(query: str, stem: bool = True) -> list[str]:

@@ -190,3 +190,25 @@ def test_stem_sql_pastes_verbatim_into_duckdb():
     q = "SELECT " + stem_sql("['running', 'stories', 'фильмами']") + " AS r"
     (r,) = duckdb.sql(q).fetchone()
     assert list(r) == ["run", "stori", "фильм"]
+
+
+def test_analyze_query_matches_jvm_analyzer(spark):
+    """The query-side analyzer (Python) splits, stops and stems exactly
+    like the index-side one (JVM), so a `match` finds every indexed doc
+    whatever the script — accented Latin and CJK included."""
+    from djangoadmin_postgresql_2_elasticseach_spark.functions.text import analyze
+    from djangoadmin_postgresql_2_elasticseach_spark.search.query import (
+        analyze_query,
+    )
+
+    samples = PARITY_SAMPLES + KNOWN_DIVERGENT + ["Café Amélie"]
+    for stem in (True, False):
+        rows = (
+            spark.createDataFrame(list(enumerate(samples)), "id long, t string")
+            .select("id", analyze("`t`", stem=stem).alias("toks"))
+            .collect()
+        )
+        jvm = {r["id"]: list(r["toks"]) for r in rows}
+        for i, s in enumerate(samples):
+            assert analyze_query(s, stem=stem) == jvm[i], f"diverged on {s!r}"
+    assert analyze_query("Café Amélie", stem=False) == ["café", "amélie"]
